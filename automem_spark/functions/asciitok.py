@@ -42,10 +42,12 @@ def ascii_token_spans(sub):
     # Offsets are parsed as int32 below, which is only valid for pa.string
     # (large_string / string_view carry 64-bit or view offsets — silently
     # misparsing them would corrupt token spans, i.e. wrong MinHash
-    # signatures). Fail loudly instead (r15, ADVICE r14).
-    if sub.type != pa.string():
+    # signatures). Fail loudly instead (r15, ADVICE r14). A ChunkedArray
+    # carries the same .type but no single offsets buffer: reject it too.
+    if not isinstance(sub, pa.Array) or sub.type != pa.string():
         raise TypeError(
-            f"ascii_token_spans requires a pa.string() array, got {sub.type}"
+            "ascii_token_spans requires a pa.string() Array, got "
+            f"{type(sub).__name__} of {getattr(sub, 'type', None)}"
         )
     m = len(sub)
     if m == 0:

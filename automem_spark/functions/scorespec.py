@@ -51,7 +51,7 @@ def keyword_raw_score_sql_spark(
     ~0.25s of py4j tree calls per query. `cl`/`tl` let-bindings evaluate
     the content lowering and tag lowering once per row (the Column twin
     inlined them per keyword). ``sql_str`` is the caller's string-literal
-    escaper (recall.py::_sql_str).
+    escaper (text.py::sql_string_literal).
 
     Measured r11 (500k rows, sf10): UNROLLING the let-bindings (inline
     `lower(coalesce(content,''))` per term) is NOT faster here — the
@@ -78,7 +78,7 @@ def keyword_raw_score_sql_spark(
 def duck_sql_str_body(value: str) -> str:
     """Body of a DuckDB single-quoted string literal: embedded quotes are
     doubled; standard SQL literals treat backslash literally, so nothing
-    else needs escaping. The DuckDB twin of recall.py::_sql_str — used for
+    else needs escaping. The DuckDB twin of text.py::sql_string_literal — used for
     FREE-TEXT values (the whole-phrase bonus term), where the folded-token
     charset assert would reject legitimate punctuation."""
     return value.replace("'", "''")

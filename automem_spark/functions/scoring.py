@@ -13,7 +13,11 @@ from dataclasses import dataclass
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from automem_spark.functions.text import assert_sql_literal_safe, content_tokens_expr
+from automem_spark.functions.text import (
+    assert_sql_literal_safe,
+    content_tokens_expr,
+    sql_string_literal,
+)
 
 
 @dataclass(frozen=True)
@@ -149,6 +153,55 @@ def context_bonus_expr(
             mem_id.cast("string").isin(*[str(i) for i in priority_ids]),
             F.lit(w.context_anchor),
         ).otherwise(F.lit(0.0))
+    return bonus
+
+
+def context_bonus_sql_spark(
+    *,
+    tags: str = "`tags`",
+    mem_type: str = "`type`",
+    mem_id: str = "`id`",
+    priority_tags: list[str] | None = None,
+    priority_types: list[str] | None = None,
+    priority_ids: list | None = None,
+    w: Weights = DEFAULT_WEIGHTS,
+) -> str:
+    """`context_bonus_expr` as Spark-SQL text for the one-`F.expr` fast
+    path: the same terms added in the same order to the same 0.0 seed, so
+    the value is bit-identical (pinned in tests/test_hybrid_score_fast.py).
+    Priority values are caller data, so every one is an escaped literal.
+    The canonicalized tag array is bound once per row."""
+    import re as _re
+
+    def d(x: float) -> str:
+        return f"CAST({x!r} AS DOUBLE)"
+
+    bonus = d(0.0)
+    if priority_tags:
+        hits = " OR ".join(
+            f"exists(ctags, t -> (t = {c}) OR startswith(t, {c}) OR contains(t, {c}))"
+            for c in (
+                sql_string_literal(_re.sub(r"[:/]+", ":", p.strip().lower()))
+                for p in priority_tags
+            )
+        )
+        canon = f"transform({tags}, t -> regexp_replace(lower(t), '[:/]+', ':'))"
+        hit = (
+            f"element_at(transform(array({canon}), ctags -> false OR {hits}), 1)"
+        )
+        bonus = f"({bonus} + CASE WHEN {hit} THEN {d(w.context_tag)} ELSE {d(0.0)} END)"
+    if priority_types:
+        titled = ", ".join(sql_string_literal(t.strip().title()) for t in priority_types)
+        bonus = (
+            f"({bonus} + CASE WHEN initcap(trim({mem_type})) IN ({titled})"
+            f" THEN {d(w.context_type)} ELSE {d(0.0)} END)"
+        )
+    if priority_ids:
+        ids = ", ".join(sql_string_literal(str(i)) for i in priority_ids)
+        bonus = (
+            f"({bonus} + CASE WHEN CAST({mem_id} AS STRING) IN ({ids})"
+            f" THEN {d(w.context_anchor)} ELSE {d(0.0)} END)"
+        )
     return bonus
 
 

@@ -41,6 +41,36 @@ def assert_sql_literal_safe(value: str, what: str = "token") -> str:
     return value
 
 
+def sql_string_literal(s: str) -> str:
+    """Spark-SQL single-quoted string literal (backslash escaping) for
+    arbitrary caller data."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def sql_typed_literal(v, type_sql: str) -> str:
+    """A driver-side value re-entering a plan as `CAST('<text>' AS type)`:
+    floats go through repr (shortest round-trip text), so the parsed value
+    is the same double; None is a typed NULL."""
+    if v is None:
+        return f"CAST(NULL AS {type_sql})"
+    return f"CAST({sql_string_literal(repr(v) if isinstance(v, float) else str(v))} AS {type_sql})"
+
+
+def in_list_expr(col: str, values) -> Column:
+    """`col IN (values)` as ONE parsed expression instead of a py4j literal
+    per value (Column.isin): bounded driver-side id sets (a request's
+    candidates) enter plans this way and still reach the scan as a pushed
+    `In` filter. Other value types fall back to Column.isin; an empty
+    set is FALSE."""
+    vals = list(values)
+    if not vals:
+        return F.lit(False)
+    if not all(type(v) in (int, str) for v in vals):
+        return F.col(col).isin(*vals)
+    lits = (str(v) if type(v) is int else sql_string_literal(v) for v in vals)
+    return F.expr(f"`{col}` IN ({', '.join(lits)})")
+
+
 # Reference stopword list (automem/utils/text.py:10-36).
 SEARCH_STOPWORDS = frozenset(
     {

@@ -208,52 +208,63 @@ def entity_expand(
       claims the row; we dedup by (id → lowest slug), identical whenever a
       memory carries at most one entity tag (true of our fixtures).
 
-    Scale: the slug list is ≤5 rows — broadcast; the per-entity top-k is a
-    bounded window; no full shuffle of the corpus beyond the tag filter.
+    Scale: `seeds` is a request's bounded result set, read once to the
+    driver (no job when it is already a local frame): the ≤max_entities
+    slugs and the seed ids enter the plan as literals, so the corpus is
+    scanned once with no join. The per-entity top-k runs on the optimizer's
+    map-side partial group limit (≤ parts × entities × k rows cross the one
+    shuffle); the per-id dedup and the total cap then run on that bounded
+    set in one task.
     """
     from pyspark.sql import Window
 
-    from automem_spark.functions.scoring import hybrid_score_expr
+    from automem_spark.functions.scoring import hybrid_score_sql_spark
+    from automem_spark.functions.text import in_list_expr, sql_string_literal
+    from automem_spark.plans.checkpoint import collect_bounded
 
-    slugs = (
-        seeds.select(F.explode("tags").alias("tag"))
-        .filter(F.col("tag").startswith("entity:people:"))
-        .select(F.element_at(F.split("tag", ":"), -1).alias("slug"))
-        .distinct()
-        .orderBy("slug")
-        .limit(max_entities)
+    prefix = "entity:people:"
+    seed_rows = collect_bounded(seeds.select("id", "tags"))
+    slugs = sorted(
+        {
+            t.split(":")[-1]
+            for r in seed_rows
+            for t in (r["tags"] or [])
+            if t is not None and t.startswith(prefix)
+        }
+    )[:max_entities]
+    seed_ids = [r["id"] for r in seed_rows if r["id"] is not None]
+    pool = memories if not seed_ids else memories.filter(
+        F.col("id").isNull() | ~in_list_expr("id", seed_ids)
     )
-    cand = (
-        memories.crossJoin(F.broadcast(slugs))
-        .filter(
-            F.exists(
-                F.col("tags"),
-                lambda t: t.startswith(F.concat(F.lit("entity:people:"), F.col("slug"))),
-            )
-        )
-        .join(seeds.select("id"), "id", "left_anti")
+    if not slugs:
+        pool = pool.filter(F.lit(False))  # pruned to an empty relation
+    # one row per (memory, matching slug); slugs are caller data, so they
+    # enter the SQL text as escaped literals
+    slug_arr = "array(" + ", ".join(sql_string_literal(x) for x in slugs) + ")"
+    matched = F.expr(
+        f"filter(CAST({slug_arr} AS ARRAY<STRING>), slug -> exists(`tags`,"
+        f" t -> startswith(t, concat({sql_string_literal(prefix)}, slug))))"
     )
+    cand = pool.withColumn("slug", F.explode(matched))
     w_ent = Window.partitionBy("slug").orderBy(F.desc("importance"), F.asc("id"))
     w_id = Window.partitionBy("id").orderBy(F.asc("slug"))
     cand = (
         cand.withColumn("_r", F.row_number().over(w_ent))
         .filter(F.col("_r") <= limit_per_entity)
+        .coalesce(1)
         .withColumn("_rid", F.row_number().over(w_id))
         .filter(F.col("_rid") == 1)
         .drop("_r", "_rid")
     )
     scored = cand.withColumn(
         "final_score",
-        hybrid_score_expr(
-            match_type=F.lit("entity_expansion"),
-            match_score=F.lit(0.0),
-            content=F.col("content"),
-            tags=F.col("tags"),
-            importance=F.col("importance"),
-            confidence=F.col("confidence"),
-            timestamp=F.col("timestamp"),
-            now=F.lit(now).cast("timestamp"),
-            tokens=query_tokens,
+        F.expr(
+            hybrid_score_sql_spark(
+                tokens=query_tokens,
+                now=now,
+                match_type="'entity_expansion'",
+                match_score="CAST(0.0 AS DOUBLE)",
+            )
         )
         + F.lit(boost),
     )

@@ -42,23 +42,18 @@ LEGACY_DISCOVERED = {
 }
 
 
-def edge_strength_expr(
-    strength: Column | None = None,
-    score: Column | None = None,
-    confidence: Column | None = None,
-    similarity: Column | None = None,
-    cnt: Column | None = None,
-) -> Column:
-    """The canonical strength read: coalesce(strength, score, confidence,
-    similarity, toFloat(count), 0.0) (runtime_relations.py:35-42)."""
-    return F.coalesce(
-        (strength if strength is not None else F.col("strength")).cast("double"),
-        (score if score is not None else F.col("score")).cast("double"),
-        (confidence if confidence is not None else F.col("confidence")).cast("double"),
-        (similarity if similarity is not None else F.col("similarity")).cast("double"),
-        (cnt if cnt is not None else F.col("cnt")).cast("double"),
-        F.lit(0.0),
-    )
+#: The canonical strength read: coalesce(strength, score, confidence,
+#: similarity, toFloat(count), 0.0) (runtime_relations.py:35-42).
+EDGE_STRENGTH_SQL = (
+    "coalesce(CAST(`strength` AS DOUBLE), CAST(`score` AS DOUBLE),"
+    " CAST(`confidence` AS DOUBLE), CAST(`similarity` AS DOUBLE),"
+    " CAST(`cnt` AS DOUBLE), CAST(0.0 AS DOUBLE))"
+)
+
+
+def edge_strength_expr() -> Column:
+    """EDGE_STRENGTH_SQL over the edge columns, as one parsed expression."""
+    return F.expr(EDGE_STRENGTH_SQL)
 
 
 def canonical_rel_type_expr(rel_type: Column, kind: Column) -> Column:
@@ -127,48 +122,67 @@ def expand_relations(
 
     relation_score = strength + 0.25 * seed_score; targets must pass the
     excluded-type/archived filters and the strength/importance thresholds;
-    per-seed cap then a global cap, both by relation_score."""
-    s = seeds.select(
-        F.col(seed_id).alias("seed_id"), F.col(seed_score).alias("seed_score")
+    per-seed cap then a global cap, both by relation_score.
+
+    `seeds` is a request's bounded result set: it is read once to the
+    driver (no job when it is already a local frame) and enters the plan
+    as literals — `IN` filters pushed into both edge scans and a seed-score
+    map — so no seed frame is broadcast or shuffled. The hop set (edges
+    incident to the seeds) is the only frame broadcast; the corpus is
+    streamed against it, never broadcast."""
+    from automem_spark.functions.text import in_list_expr, sql_typed_literal
+    from automem_spark.plans.checkpoint import collect_bounded
+
+    id_type = seeds.schema[seed_id].dataType.simpleString()
+    score_type = seeds.schema[seed_score].dataType.simpleString()
+    scores: dict = {}
+    for r in collect_bounded(seeds.select(seed_id, seed_score)):
+        if r[seed_id] is not None:
+            scores.setdefault(r[seed_id], []).append(r[seed_score])
+
+    def ids_in(c: str) -> Column:
+        return in_list_expr(c, scores)
+
+    # one row per seed occurrence, as a join with the seed frame gives
+    seed_scores = F.expr(
+        "element_at(map("
+        + ", ".join(
+            f"{sql_typed_literal(k, id_type)}, array("
+            + ", ".join(sql_typed_literal(v, score_type) for v in vs)
+            + ")"
+            for k, vs in scores.items()
+        )
+        + "), `seed_id`)"
+        if scores
+        else f"array(CAST(NULL AS {score_type}))"
     )
-    und = edges.select(
-        "src", "dst", "rel_type", edge_strength_expr().alias("strength")
+    und = edges.filter(ids_in("src")).selectExpr(
+        "src AS seed_id", "dst", "rel_type", f"{EDGE_STRENGTH_SQL} AS strength"
     ).unionByName(
-        edges.select(
-            F.col("dst").alias("src"),
-            F.col("src").alias("dst"),
-            "rel_type",
-            edge_strength_expr().alias("strength"),
+        edges.filter(ids_in("dst")).selectExpr(
+            "dst AS seed_id", "src AS dst", "rel_type", f"{EDGE_STRENGTH_SQL} AS strength"
         )
     )
-    hops = s.join(und, s.seed_id == und.src).filter(F.col("strength") >= min_strength)
-    # The hop-target set is bounded (edges incident to <= |seeds| nodes), the
-    # memories side is the corpus: semi-bound the corpus scan by the target
-    # ids and broadcast only the bounded projection back — never the corpus
-    # itself (local-mode AQE would happily broadcast the whole id column).
-    dst_ids = hops.select("dst").distinct()
-    tgt = memories.select(
-        F.col("id").alias("dst"),
-        F.col("importance").alias("_imp"),
-        F.col("archived").alias("_arch"),
-        F.col("type").alias("_type"),
-    ).join(F.broadcast(dst_ids), "dst", "left_semi")
+    # targets that are themselves seeds are excluded (the reference dedups
+    # against seen ids)
     hops = (
-        hops.join(F.broadcast(tgt), "dst")
-        .filter(F.coalesce(F.col("_arch"), F.lit(False)) == False)  # noqa: E712
-        .filter(F.col("_type") != "MetaPattern")
-        .filter(F.col("_imp") >= min_importance)
-        .filter(F.col("dst") != F.col("seed_id"))
+        und.filter(f"strength >= {sql_typed_literal(float(min_strength), 'DOUBLE')}")
+        .filter(~ids_in("dst"))
+        .withColumn("seed_score", F.explode(seed_scores))
     )
-    # exclude targets that are themselves seeds (reference dedups vs seen ids)
-    hops = hops.join(
-        s.select(F.col("seed_id").alias("dst")), "dst", "left_anti"
+    tgt = memories.selectExpr(
+        "id AS dst", "importance AS _imp", "archived AS _arch", "type AS _type"
     )
-    scored = hops.withColumn(
-        "relation_score", F.col("strength") + 0.25 * F.col("seed_score")
+    hops = tgt.join(F.broadcast(hops), "dst").filter(
+        "coalesce(_arch, false) = false AND _type != 'MetaPattern'"
+        f" AND _imp >= {sql_typed_literal(float(min_importance), 'DOUBLE')}"
+    )
+    scored = hops.selectExpr(
+        "seed_id", "dst", "rel_type", "strength",
+        "strength + CAST(0.25 AS DOUBLE) * seed_score AS relation_score",
     )
     per = top_k_per_group(
-        scored.select("seed_id", "dst", "rel_type", "strength", "relation_score"),
+        scored,
         ["seed_id"],
         [F.desc("relation_score"), F.asc("dst"), F.asc("rel_type")],
         per_seed,
@@ -230,6 +244,26 @@ def supersession_advance_columns(stepped: DataFrame) -> DataFrame:
 SUPERSESSION_LOCAL_MAX_WALKS = 1_000_000
 
 
+def _walk_chains(step: dict, starts, max_hops: int):
+    """THE supersession pointer chase, shared by the single-task walker and
+    the start-set path: follow cur -> nxt up to max_hops, stopping at a
+    missing/NULL pointer or a node already on the walk (cycle guard).
+    Yields (start, head, hops) for every start that moved."""
+    import pandas as pd
+
+    for start in starts:
+        head, hops, seen = start, 0, {start}
+        for _ in range(max_hops):
+            nxt_id = step.get(head)
+            if nxt_id is None or pd.isna(nxt_id) or nxt_id in seen:
+                break
+            head = nxt_id
+            hops += 1
+            seen.add(nxt_id)
+        if hops > 0:
+            yield start, head, hops
+
+
 def _supersession_local_walk(nxt: DataFrame, max_hops: int) -> DataFrame:
     """Single-task twin of the hop loop: follow cur -> nxt pointers up to
     max_hops with the same visited-set cycle guard. coalesce(1) narrows
@@ -252,23 +286,113 @@ def _supersession_local_walk(nxt: DataFrame, max_hops: int) -> DataFrame:
         step: dict = {}
         for pdf in batches:
             step.update(zip(pdf["cur"], pdf["nxt"]))
-        starts, heads, hops_out = [], [], []
-        for start in step:
-            head, hops, seen = start, 0, {start}
-            for _ in range(max_hops):
-                nxt_id = step.get(head)
-                if nxt_id is None or pd.isna(nxt_id) or nxt_id in seen:
-                    break
-                head = nxt_id
-                hops += 1
-                seen.add(nxt_id)
-            if hops > 0:
-                starts.append(start)
-                heads.append(head)
-                hops_out.append(hops)
-        yield pd.DataFrame({"start": starts, "head": heads, "hops": hops_out})
+        yield pd.DataFrame(
+            list(_walk_chains(step, list(step), max_hops)),
+            columns=["start", "head", "hops"],
+        )
 
     return nxt.coalesce(1).mapInPandas(walk, schema=out_schema)
+
+
+def desc_nulls_last_key(v):
+    """Key for one DESC NULLS LAST column when the driver picks the FIRST
+    row of a bounded set with `max()`: NULL loses to every value, NaN beats
+    every number (Spark's double ordering)."""
+    if v is None:
+        return (0, 0, 0)
+    if isinstance(v, float) and v != v:
+        return (1, 1, 0)
+    return (1, 0, v)
+
+
+def _supersession_from_starts(
+    sup: DataFrame, node_state: DataFrame | None, starts, max_hops: int
+) -> DataFrame:
+    """Walk only the chains that leave a bounded start set: a frontier of
+    at most max_hops + 1 rounds, each ONE job that collects the outgoing
+    supersession edges of the newly reached nodes together with the
+    activity of the nodes reached one round earlier (both are id-IN
+    filters pushed into their scans). The round exits as soon as nothing
+    new is reached. Per node, the pointer is the newest edge (updated_at
+    DESC, dst DESC, NULLs last) whose target is active — the same choice
+    the global path makes with its semi-join and top-1 window — and the
+    walk is `_walk_chains`. Returns a LocalRelation (start, head, hops)."""
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    from automem_spark.functions.text import in_list_expr
+    from automem_spark.plans.checkpoint import collect_bounded, local_frame
+
+    id_type = sup.schema["src"].dataType
+    upd_type = sup.schema["updated_at_epoch"].dataType
+    starts = list(dict.fromkeys(s for s in starts if s is not None))
+    out_edges: dict = {}
+    active: set = set()
+    fetched_edges: set = set()
+    fetched_state: set = set()
+    want_edges, want_state = set(starts), set()
+    for depth in range(max_hops + 1):
+        if not want_edges and not want_state:
+            break
+        parts = []
+        if want_edges:
+            parts.append(
+                sup.filter(in_list_expr("src", want_edges)).select(
+                    F.lit(True).alias("is_edge"),
+                    "src",
+                    "dst",
+                    "updated_at_epoch",
+                    F.lit(False).alias("active"),
+                )
+            )
+        if want_state:
+            parts.append(
+                node_state.filter(in_list_expr("id", want_state)).select(
+                    F.lit(False).alias("is_edge"),
+                    F.col("id").cast(id_type).alias("src"),
+                    F.lit(None).cast(id_type).alias("dst"),
+                    F.lit(None).cast(upd_type).alias("updated_at_epoch"),
+                    F.col("state_reason").isNull().alias("active"),
+                )
+            )
+        frame = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
+        reached = set()
+        for r in collect_bounded(frame):
+            if r["is_edge"]:
+                out_edges.setdefault(r["src"], []).append(
+                    (r["updated_at_epoch"], r["dst"])
+                )
+                if r["dst"] is not None:
+                    reached.add(r["dst"])
+            elif r["active"]:
+                active.add(r["src"])
+        fetched_edges |= want_edges
+        fetched_state |= want_state
+        want_state = reached - fetched_state if node_state is not None else set()
+        # nodes first reached at depth d+1 need their own edges only while
+        # a walk can still take another hop from them
+        want_edges = reached - fetched_edges if depth + 1 < max_hops else set()
+
+    step: dict = {}
+    for src, cands in out_edges.items():
+        if node_state is not None:
+            cands = [c for c in cands if c[1] is not None and c[1] in active]
+        if cands:
+            step[src] = max(
+                cands,
+                key=lambda c: (desc_nulls_last_key(c[0]), desc_nulls_last_key(c[1])),
+            )[1]
+    rows = [
+        {"start": s, "head": h, "hops": n}
+        for s, h, n in _walk_chains(step, starts, max_hops)
+    ]
+    schema = StructType(
+        [
+            StructField("start", id_type),
+            StructField("head", id_type),
+            StructField("hops", IntegerType()),
+        ]
+    )
+    return local_frame(sup.sparkSession, rows, schema)
 
 
 def resolve_supersession(
@@ -277,6 +401,7 @@ def resolve_supersession(
     max_hops: int = 5,
     node_state: DataFrame | None = None,
     local_max_walks: int | None = None,
+    start: list | None = None,
 ) -> DataFrame:
     """J4: walk INVALIDATED_BY/EVOLVED_INTO chains to their head, ≤max_hops,
     cycle-safe via a visited-path check (recall.py:452-593).
@@ -297,8 +422,17 @@ def resolve_supersession(
     — chains are 1-2 hops in practice, which saves the tail rounds' whole
     frame materializations (sf0.1: 5 rounds → 2; the early exit is
     output-identical because a round with zero open walks is a no-op).
+
+    ``start`` (a bounded list of ids, e.g. a recall request's candidates)
+    walks only the chains leaving those nodes and returns rows for them
+    alone — what the global walk returns, semi-joined to ``start`` — from
+    id-filtered reads of edges and node state instead of a corpus-wide
+    pointer table (`_supersession_from_starts`). Without it (maintenance,
+    the J4 registry row) the plan below is unchanged.
     """
     sup = edges.filter(F.col("rel_type").isin(*SUPERSESSION_TYPES))
+    if start is not None:
+        return _supersession_from_starts(sup, node_state, start, max_hops)
     if node_state is not None:
         active_dst = node_state.filter(F.col("state_reason").isNull()).select(
             F.col("id").alias("dst")

@@ -26,9 +26,18 @@ from pyspark.sql import functions as F
 
 from automem_spark.functions.scoring import DEFAULT_WEIGHTS, Weights, hybrid_score_expr
 from automem_spark.functions.tags import exclude_tags_expr, tag_filter_expr
-from automem_spark.functions.text import extract_keywords, fingerprint_fold_sql_spark
+from automem_spark.functions.text import (
+    extract_keywords,
+    fingerprint_fold_sql_spark,
+    in_list_expr,
+    sql_string_literal,
+)
 from automem_spark.functions.vector import cosine_expr
-from automem_spark.plans.checkpoint import maybe_checkpoint
+from automem_spark.plans.checkpoint import (
+    collect_bounded,
+    maybe_checkpoint,
+    maybe_localize,
+)
 from automem_spark.plans.tuning import tuning_int
 
 # Channel precedence for cross-channel dedup (vector beats keyword beats
@@ -37,6 +46,13 @@ CHANNEL_PRIORITY = {"vector": 4, "keyword": 3, "metadata": 2, "tag": 1, "trendin
 
 # Internal artifact types never surfaced (automem/config.py:164-166).
 EXCLUDED_TYPES = ("MetaPattern",)
+
+# F6/F7 as one parsed expression (every recall request builds it)
+_BASE_FILTER_SQL = (
+    "coalesce(`archived`, false) = false AND NOT coalesce(`type`, '') IN ("
+    + ", ".join(f"'{t}'" for t in EXCLUDED_TYPES)
+    + ")"
+)
 
 RECALL_VECTOR_OVERFETCH = 4  # config.py:150-159
 RECALL_OVERFETCH_CAP = 200
@@ -82,8 +98,7 @@ def base_filter(
     (archived F7, excluded types F6, time window F5, tag filters F1-F3).
     Applied once, before the channels fan out, so Catalyst pushes them into
     a single parquet scan."""
-    out = memories.filter(F.coalesce(F.col("archived"), F.lit(False)) == False)  # noqa: E712
-    out = out.filter(~F.coalesce(F.col("type"), F.lit("")).isin(*EXCLUDED_TYPES))
+    out = memories.filter(F.expr(_BASE_FILTER_SQL))
     if req.start:
         out = out.filter(F.col("timestamp") >= F.lit(req.start).cast("timestamp"))
     if req.end:
@@ -99,9 +114,6 @@ def base_filter(
     return out
 
 
-def _sql_str(s: str) -> str:
-    """Spark-SQL single-quoted string literal (backslash escaping)."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def _keyword_raw_score_sql(keywords: list[str], phrase: str) -> str:
@@ -112,7 +124,7 @@ def _keyword_raw_score_sql(keywords: list[str], phrase: str) -> str:
     tests/test_hybrid_score_fast.py."""
     from automem_spark.functions.scorespec import keyword_raw_score_sql_spark
 
-    return keyword_raw_score_sql_spark(keywords, phrase, _sql_str)
+    return keyword_raw_score_sql_spark(keywords, phrase, sql_string_literal)
 
 
 def keyword_channel(pool: DataFrame, query: str, limit: int) -> DataFrame:
@@ -819,32 +831,46 @@ def inject_priority_ids(
     """J11 priority-id injection (recall.py:1094-1312): explicitly requested
     ids are fetched (archived still excluded), appended as
     match_type='priority_id' if absent, and the final ordering guarantees
-    they come first (anchor ordering), then score order."""
+    they come first (anchor ordering), then score order.
+
+    Both inputs are bounded (the request's results, ≤ |priority_ids|
+    fetched rows), so they meet in ONE partition: a fetched row is dropped
+    when a result row carries its id (the anti-join, as a per-id window),
+    and the same partition serves the position window — one exchange, and
+    `results` is computed once."""
+    is_priority = in_list_expr("id", priority_ids)
     wanted = memories.filter(
-        F.col("id").isin(*priority_ids)
+        is_priority
         & (F.coalesce(F.col("archived"), F.lit(False)) == False)  # noqa: E712
     )
-    injected = (
-        wanted.join(results.select("id"), "id", "left_anti")
-        .withColumn("match_type", F.lit("priority_id"))
-        .withColumn("match_score", F.lit(0.0))
-        .withColumn("final_score", F.lit(0.0))
+    fill = {
+        "match_type": "'priority_id'",
+        "match_score": "CAST(0.0 AS DOUBLE)",
+        "final_score": "CAST(0.0 AS DOUBLE)",
+    }
+    injected = wanted.selectExpr(
+        *[f"{fill.get(c, f'`{c}`')} AS `{c}`" for c in results.columns], "1 AS _inj"
     )
-    combined = results.unionByName(
-        injected.select(*results.columns), allowMissingColumns=False
+    combined = (
+        results.selectExpr("*", "0 AS _inj")
+        .unionByName(injected)
+        .repartition(1)
+        .withColumns(
+            {
+                "_first": F.expr("min(_inj) OVER (PARTITION BY id)"),
+                "_pin": is_priority.cast("int"),
+            }
+        )
+        .filter("_inj = _first")
     )
-    is_priority = F.col("id").isin(*priority_ids).cast("int")
-    w = Window.partitionBy(F.lit(1)).orderBy(
-        F.desc(is_priority),
-        F.desc("final_score"),
-        F.desc("match_score"),
-        F.desc("importance"),
-        F.desc("timestamp"),
-        F.asc("id"),
+    position = F.expr(
+        "row_number() OVER (ORDER BY _pin DESC, final_score DESC,"
+        " match_score DESC, importance DESC, timestamp DESC, id ASC)"
     )
     return (
-        combined.withColumn("position", F.row_number().over(w))
-        .filter(F.col("position") <= limit)
+        combined.withColumn("position", position)
+        .filter(f"position <= {int(limit)}")
+        .drop("_inj", "_first", "_pin")
     )
 
 
@@ -862,46 +888,64 @@ def adaptive_score_floor(
     score BELOW the gap and rows with score >= floor survive — applied only
     if at least (n+1)//2 rows survive.
 
-    Window shape: rank + lag over the (optionally per-query) candidate set —
-    candidate sets are bounded (overfetch cap 200), so the window is cheap.
+    Window shape: four dependent window steps over the (optionally
+    per-query) candidate set — (rank, gap, n, top), then max gap, then the
+    floor (the score at the first row carrying the max gap, as a struct min
+    ordered by rank), then the retained count. Same-spec columns share one
+    `withColumns`; candidate sets are bounded (overfetch cap 200), so the
+    windows are cheap.
     """
-    part = partition_cols or []
-    w = Window.partitionBy(*part).orderBy(F.desc(score_col), F.asc("id"))
-    wall = Window.partitionBy(*part)
-    s = F.col(score_col)
-    step1 = (
-        results.withColumn("_rn", F.row_number().over(w))
-        .withColumn("_n", F.count("*").over(wall))
-        .withColumn("_top", F.max(score_col).over(wall))
-        .withColumn("_gap", F.lag(score_col).over(w) - s)
+    sc = f"`{score_col}`"
+    w = _over(partition_cols, f"{sc} DESC, `id` ASC")
+    wall = _over(partition_cols)
+    step1 = results.withColumns(
+        {
+            "_rn": F.expr(f"row_number() {w}"),
+            "_gap": F.expr(f"lag({sc}) {w} - {sc}"),
+            "_n": F.expr(f"count(1) {wall}"),
+            "_top": F.expr(f"max({sc}) {wall}"),
+        }
     )
-    halfway = F.greatest(F.lit(3), F.floor(F.col("_n") / 2))
     # gaps at 1-indexed positions i in [2, halfway] (list index 1..halfway-1)
-    step2 = step1.withColumn(
-        "_cand_gap",
-        F.when((F.col("_rn") >= 2) & (F.col("_rn") <= halfway) & (F.col("_gap") > 0), F.col("_gap")),
+    cand_gap = (
+        "CASE WHEN `_rn` >= 2 AND `_rn` <= greatest(3, floor(`_n` / 2))"
+        " AND `_gap` > 0 THEN `_gap` END"
     )
-    step3 = step2.withColumn("_max_gap", F.max("_cand_gap").over(wall))
+    step2 = step1.withColumns(
+        {"_cand_gap": F.expr(cand_gap), "_max_gap": F.expr(f"max({cand_gap}) {wall}")}
+    )
+    # first occurrence of the max gap wins: the lowest rank carrying it
+    step3 = step2.withColumn(
+        "_floor",
+        F.expr(
+            f"min(CASE WHEN `_cand_gap` = `_max_gap` THEN struct(`_rn`, {sc}) END)"
+            f" {wall}"
+        )[score_col],
+    )
     step4 = step3.withColumn(
-        "_gap_rank",
-        F.min(F.when(F.col("_cand_gap") == F.col("_max_gap"), F.col("_rn"))).over(wall),
-    )
-    step5 = step4.withColumn(
-        "_floor", F.max(F.when(F.col("_rn") == F.col("_gap_rank"), s)).over(wall)
-    )
-    step6 = step5.withColumn(
-        "_retained", F.sum(F.when(s >= F.col("_floor"), 1).otherwise(0)).over(wall)
+        "_retained",
+        F.expr(f"sum(CASE WHEN {sc} >= `_floor` THEN 1 ELSE 0 END) {wall}"),
     )
     applies = (
-        (F.col("_n") > 3)
-        & F.col("_max_gap").isNotNull()
-        & (F.col("_max_gap") > 0.25 * F.col("_top"))
-        & (F.col("_retained") >= F.floor((F.col("_n") + 1) / 2))
+        "`_n` > 3 AND `_max_gap` IS NOT NULL"
+        " AND `_max_gap` > CAST(0.25 AS DOUBLE) * `_top`"
+        " AND `_retained` >= floor((`_n` + 1) / 2)"
     )
     return (
-        step6.filter(~F.coalesce(applies, F.lit(False)) | (s >= F.col("_floor")))
-        .drop("_rn", "_n", "_top", "_gap", "_cand_gap", "_max_gap", "_gap_rank", "_floor", "_retained")
+        step4.filter(F.expr(f"NOT coalesce({applies}, false) OR {sc} >= `_floor`"))
+        .drop("_rn", "_n", "_top", "_gap", "_cand_gap", "_max_gap", "_floor", "_retained")
     )
+
+
+def _over(partition_cols: list[str] | None, order_sql: str = "") -> str:
+    """A window clause as SQL text: the re-rank windows below are built as
+    one parsed expression each instead of a py4j Column tree."""
+    spec = []
+    if partition_cols:
+        spec.append("PARTITION BY " + ", ".join(f"`{c}`" for c in partition_cols))
+    if order_sql:
+        spec.append("ORDER BY " + order_sql)
+    return f"OVER ({' '.join(spec)})"
 
 
 def recency_rerank(
@@ -914,13 +958,16 @@ def recency_rerank(
 ) -> DataFrame:
     """W5 (recall.py:2315-2349): min-max normalize timestamps over the
     current candidate set and add weight × rel_recency to the score."""
-    part = partition_cols or []
-    wall = Window.partitionBy(*part)
-    epoch = F.col(ts_col).cast("double")
-    tmin = F.min(epoch).over(wall)
-    tmax = F.max(epoch).over(wall)
-    rel = F.when(tmax > tmin, (epoch - tmin) / (tmax - tmin)).otherwise(F.lit(0.0))
-    return results.withColumn(score_col, F.col(score_col) + F.lit(weight) * rel)
+    epoch = f"CAST(`{ts_col}` AS DOUBLE)"
+    wall = _over(partition_cols)
+    tmin, tmax = f"min({epoch}) {wall}", f"max({epoch}) {wall}"
+    rel = (
+        f"CASE WHEN {tmax} > {tmin} THEN ({epoch} - {tmin}) / ({tmax} - {tmin})"
+        " ELSE CAST(0.0 AS DOUBLE) END"
+    )
+    return results.withColumn(
+        score_col, F.expr(f"`{score_col}` + CAST({weight!r} AS DOUBLE) * ({rel})")
+    )
 
 
 # dedup_results' two key expressions as static SQL text (one F.expr each
@@ -989,27 +1036,41 @@ def recall_full(
     win over entity expansions (expansions are appended only for unseen
     ids, recall.py:2239-2297).
 
-    Scale shape: the only corpus-wide work is the channel scan (filters
-    pushed to the parquet scan). Everything after operates on bounded sets
-    (seeds ≤ limit, expansions ≤ 25 each, supersession heads ≪ corpus), so
-    every join below broadcasts and the windows are O(limit) — the pipeline
-    adds no corpus-wide shuffle at 100 TB.
+    Scale shape: the seed set (≤ limit rows) and the candidate set
+    (≤ limit + 2×25) are each materialized once on the driver as local
+    frames, so their ids reach the edge and memory scans as pushed `IN`
+    filters. Relation expansion broadcasts only the seeds' incident edges
+    and streams the corpus against them; entity expansion scans the corpus
+    once with literal slugs, and its one shuffle carries the map-side
+    top-k survivors; the J5 walk follows only the candidates' supersession
+    chains. Nothing corpus-sized is broadcast or shuffled, no sort-merge
+    join runs, and the re-rank windows run over the bounded candidates.
+    A request runs about a dozen Spark jobs (pinned ≤ 16 in
+    tests/test_recall_full_scope.py).
 
     Output: (id, match_type, position, final_score).
     """
-    from automem_spark.functions.scoring import context_bonus_expr
+    from automem_spark.functions.scoring import (
+        context_bonus_expr,
+        context_bonus_sql_spark,
+        hybrid_score_sql_spark,
+    )
     from automem_spark.operators.entities import entity_expand
     from automem_spark.operators.graph import expand_relations
     from automem_spark.operators.state import current_state_filter
 
     pool = base_filter(memories, req)
     tokens = extract_keywords(req.query.strip().lower())
-    now_col = F.lit(now).cast("timestamp")
 
     # 3b-3f: keyword channel + hybrid score + X5 context bonus
-    seeds = keyword_channel(pool, req.query, req.limit).withColumn(
-        "final_score",
-        hybrid_score_expr(
+    ctx = dict(
+        priority_tags=priority_tags,
+        priority_types=priority_types,
+        priority_ids=priority_ids,
+        w=req.weights,
+    )
+    if tokens and req.weights.relevance_gate > 0:
+        score = hybrid_score_expr(
             match_type=F.col("match_type"),
             match_score=F.col("match_score"),
             content=F.col("content"),
@@ -1017,87 +1078,83 @@ def recall_full(
             importance=F.col("importance"),
             confidence=F.col("confidence"),
             timestamp=F.col("timestamp"),
-            now=now_col,
+            now=F.lit(now).cast("timestamp"),
             tokens=tokens,
             w=req.weights,
+        ) + context_bonus_expr(
+            tags=F.col("tags"), mem_type=F.col("type"), mem_id=F.col("id"), **ctx
         )
-        + context_bonus_expr(
-            tags=F.col("tags"),
-            mem_type=F.col("type"),
-            mem_id=F.col("id"),
-            priority_tags=priority_tags,
-            priority_types=priority_types,
-            priority_ids=priority_ids,
-            w=req.weights,
-        ),
+    else:
+        # one F.expr for the whole blend (the tree costs ~0.25 s of py4j
+        # calls per request; equivalence test-pinned)
+        score = F.expr(
+            f"({hybrid_score_sql_spark(tokens=tokens, now=now, w=req.weights)})"
+            f" + ({context_bonus_sql_spark(**ctx)})"
+        )
+    seeds = keyword_channel(pool, req.query, req.limit).withColumn("final_score", score)
+    # R7 (id-unique already; fingerprint guard). Bounded, with three
+    # consumers (both expansions and the SO3 union): one job, held locally.
+    seeds = maybe_localize(
+        dedup_results(seeds).select(
+            "id", "match_type", "match_score", "final_score", "tags"
+        )
     )
-    # R7 (id-unique already; fingerprint guard). The seed set is bounded and
-    # fans out to three consumers (relation expansion, entity expansion, the
-    # SO3 union) — materialize once instead of recomputing the channel scan
-    # per branch.
-    seeds = maybe_checkpoint(dedup_results(seeds))
 
     # 5: J2 relation expansion + J3 entity expansion, appended for unseen ids
-    rel = expand_relations(seeds, edges, memories).select(
-        F.col("dst").alias("id"),
-        F.lit("relation").alias("match_type"),
-        F.lit(0.0).alias("match_score"),
-        F.col("relation_score").alias("final_score"),
+    rel = expand_relations(seeds, edges, memories).selectExpr(
+        "dst AS id", "'relation' AS match_type", "CAST(0.0 AS DOUBLE) AS match_score",
+        "relation_score AS final_score", "2 AS _prio",
     )
-    ent = entity_expand(seeds, memories, query_tokens=tokens, now=now).select(
-        "id",
-        F.lit("entity_expansion").alias("match_type"),
-        F.lit(0.0).alias("match_score"),
-        "final_score",
+    ent = entity_expand(seeds, memories, query_tokens=tokens, now=now).selectExpr(
+        "id", "'entity_expansion' AS match_type", "CAST(0.0 AS DOUBLE) AS match_score",
+        "final_score", "1 AS _prio",
     )
     cand = (
-        seeds.select("id", "match_type", "match_score", "final_score")
-        .withColumn("_prio", F.lit(3))
-        .unionByName(rel.withColumn("_prio", F.lit(2)))
-        .unionByName(ent.withColumn("_prio", F.lit(1)))
+        seeds.selectExpr("id", "match_type", "match_score", "final_score", "3 AS _prio")
+        .unionByName(rel)
+        .unionByName(ent)
     )
-    w_id = Window.partitionBy("id").orderBy(
-        F.desc("_prio"), F.desc("final_score"), F.asc("match_type")
-    )
-    # bounded (≤ limit + 2×25); fans out to the state filter (candidate ids,
-    # annotation, seen-set) and the match_score rehydration — materialize once
-    cand = (
-        cand.withColumn("_rn", F.row_number().over(w_id))
-        .filter(F.col("_rn") == 1)
+    # bounded (≤ limit + 2×25): one task dedups it, and the state filter
+    # reads it from the driver
+    cand = maybe_localize(
+        cand.coalesce(1)
+        .withColumn(
+            "_rn",
+            F.expr(
+                "row_number() OVER (PARTITION BY id"
+                " ORDER BY _prio DESC, final_score DESC, match_type ASC)"
+            ),
+        )
+        .filter("_rn = 1")
         .drop("_rn", "_prio")
     )
-    cand = maybe_checkpoint(cand)
 
     # 6: J5 bitemporal filter + supersession replacement injection.
     # keep_order_cols carries importance/timestamp out of the filter's own
-    # bounded hydration — no corpus re-join (and no corpus broadcast) here.
+    # bounded id read — no corpus re-join (and no corpus broadcast) here.
     stated = current_state_filter(
         cand, memories, edges, now=now, keep_order_cols=True
-    ).drop("position")
+    ).drop("position", "state_replaces")
     # rehydrate channel match_score (injected heads were never candidates -> 0)
     hydrated = stated.join(
         F.broadcast(cand.select("id", "match_score")), "id", "left"
     ).withColumn("match_score", F.coalesce(F.col("match_score"), F.lit(0.0)))
 
     # 7: W5 relative recency; 8: F10 adaptive floor
-    reranked = recency_rerank(hydrated)
-    floored = adaptive_score_floor(reranked)
+    floored = adaptive_score_floor(recency_rerank(hydrated))
 
     # J11: priority-id injection + first-position guarantee
     if priority_ids:
         out = inject_priority_ids(
-            floored.drop("state_replaces"), memories, priority_ids,
-            limit=req.limit, now=now,
+            floored, memories, priority_ids, limit=req.limit, now=now
         )
     else:
-        w_final = Window.partitionBy(F.lit(1)).orderBy(
+        w_final = Window.orderBy(
             F.desc("final_score"), F.desc("match_score"),
             F.desc("importance"), F.desc("timestamp"), F.asc("id"),
         )
-        out = (
-            floored.drop("state_replaces")
-            .withColumn("position", F.row_number().over(w_final))
-            .filter(F.col("position") <= req.limit)
+        out = floored.withColumn("position", F.row_number().over(w_final)).filter(
+            F.col("position") <= req.limit
         )
     return out.select("id", "match_type", "position", "final_score")
 
@@ -1127,7 +1184,9 @@ def recall(
     channels: list[DataFrame] = []
     vec: DataFrame | None = None
     if query_vector is not None and "embedding" in memories.columns:
-        vec = vector_channel(pool, query_vector, req.limit)
+        # ≤ k rows with three consumers (the channel, the keyword pool's
+        # exclusion, the keyword slot count): one job, held locally
+        vec = maybe_localize(vector_channel(pool, query_vector, req.limit))
         channels.append(vec)
     normalized = req.query.strip().lower()
     if normalized and normalized != "*":
@@ -1163,21 +1222,15 @@ def recall(
             # excluded before the cut (recall.py:1999-2013). With the 4×
             # overfetch the vector channel usually fills the limit and the
             # keyword channel contributes nothing — matching the reference.
-            kw_pool = pool.join(vec.select("id"), "id", "left_anti")
-            kw = keyword_channel(kw_pool, req.query, req.limit)
-            n_vec = vec.select(F.count("*").alias("_n_vec"))
-            w_kw = Window.orderBy(
-                F.desc("match_score"), F.desc("importance"),
-                F.desc("timestamp"), F.asc("id"),
+            vec_ids = [r["id"] for r in collect_bounded(vec.select("id"))]
+            kw_pool = pool.filter(
+                F.col("id").isNull() | ~in_list_expr("id", vec_ids)
             )
-            kw = (
-                kw.withColumn("_kw_rank", F.row_number().over(w_kw))
-                .crossJoin(F.broadcast(n_vec))
-                .filter(
-                    F.col("_kw_rank")
-                    <= F.greatest(F.lit(req.limit) - F.col("_n_vec"), F.lit(0))
-                )
-                .drop("_kw_rank", "_n_vec")
+            # the channel's own ordering IS the slot ordering (match_score
+            # is monotone in the raw score), so the open slots are its top
+            # max(0, limit - |vector results|)
+            kw = keyword_channel(
+                kw_pool, req.query, max(0, req.limit - len(vec_ids))
             )
             channels.append(kw)
         # metadata sidecar (R5) when the corpus carries whitelisted scalar

@@ -9,18 +9,20 @@ Reference counterparts (SURVEY.md §2.2 F8, §2.4 J4/J5):
   deduped against ids already in the result set, and required to be active)
 
 Scale notes: `results` is a bounded candidate set (<= limit + expansions),
-so every corpus touch below is keyed off it — the candidate id set is
-broadcast INTO the memories scan (left-semi), and only the resulting
-bounded projections are broadcast back into the result-side joins. No
-corpus-derived frame is ever broadcast, and no shuffle lands on the corpus.
+so the filter runs on the driver's copy of it. Its ids reach the corpus only
+as pushed-down `id IN (...)` filters: the supersession walk reads the edges
+leaving the candidates (and, hop by hop, the edges leaving the nodes it
+reaches), and one more filtered read fetches state, importance and
+timestamp of the candidates and their heads. No corpus-wide frame is
+joined, broadcast or shuffled; the only plan work on the output is the
+final position window over the bounded rows, after a broadcast of the
+fetched (bounded) ordering columns.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-from automem_spark.plans.checkpoint import maybe_checkpoint
 
 
 def state_reason_expr(
@@ -35,6 +37,20 @@ def state_reason_expr(
         F.when(F.coalesce(archived, F.lit(False)), F.lit("archived"))
         .when(t_valid.isNotNull() & (t_valid > now), F.lit("not_yet_valid"))
         .when(t_invalid.isNotNull() & (t_invalid <= now), F.lit("expired"))
+    )
+
+
+def state_reason_sql(now: str) -> str:
+    """`state_reason_expr` over the memory columns as SQL text (one parsed
+    expression; equivalence pinned in tests/test_state_decompose.py)."""
+    from automem_spark.functions.text import assert_sql_literal_safe
+
+    ts = f"CAST('{assert_sql_literal_safe(now, 'now timestamp')}' AS TIMESTAMP)"
+    return (
+        "CASE WHEN coalesce(`archived`, false) THEN 'archived'"
+        f" WHEN `t_valid` IS NOT NULL AND `t_valid` > {ts} THEN 'not_yet_valid'"
+        f" WHEN `t_invalid` IS NOT NULL AND `t_invalid` <= {ts} THEN 'expired'"
+        " END"
     )
 
 
@@ -58,103 +74,106 @@ def current_state_filter(
     back to the next-newest edge and the walk stops at the last active node.
     A source whose every replacement candidate is inactive has NO
     replacement — it is not marked superseded (it may still be suppressed by
-    its own state reason, with nothing injected).
+    its own state reason, with nothing injected). The walk starts from the
+    candidate ids only (`resolve_supersession(..., start=ids)`), and its
+    heads feed both the suppression and the injection.
 
-    results: (id, match_type, match_score, final_score, ...)
+    results: (id, match_type, match_score, final_score, ...) — bounded
     memories: must carry (id, archived, t_valid, t_invalid, importance, timestamp)
     edges: graph edges with (src, dst, rel_type, updated_at_epoch)
 
-    Output: (id, match_type, state_replaces, final_score, position).
+    The driver reads the candidates' ids, their chains and their states,
+    and decides which rows are suppressed and which heads are injected;
+    the surviving rows are `results` itself minus an id filter.
+
+    Output: (id, match_type, state_replaces, final_score, position), plus
+    importance/timestamp when keep_order_cols.
     """
-    from automem_spark.operators.graph import resolve_supersession
+    from automem_spark.functions.text import in_list_expr
+    from automem_spark.operators.graph import desc_nulls_last_key, resolve_supersession
+    from automem_spark.plans.checkpoint import collect_bounded, local_frame
 
-    now_col = F.lit(now).cast("timestamp")
-    # Corpus-wide (id, state_reason) stays un-broadcast: it feeds the
-    # supersession walk's per-hop activity gate, which must see every node
-    # on a chain (heads can lie outside the candidate set).
-    state = memories.select(
-        "id",
-        state_reason_expr(
-            F.col("archived"), F.col("t_valid"), F.col("t_invalid"), now_col
-        ).alias("state_reason"),
-    )
+    spark = results.sparkSession
+    state_reason = F.expr(state_reason_sql(now)).alias("state_reason")
 
-    cand_ids = results.select("id").distinct()
+    rows = collect_bounded(results.select("id", score_col))
+    ids = list(dict.fromkeys(r["id"] for r in rows if r["id"] is not None))
 
     # per-hop activity gating means every returned head is active by
     # construction — no post-hoc head filter needed
-    heads = resolve_supersession(edges, node_state=state)
-    heads_cand = (
-        heads.select(F.col("start").alias("id"), F.col("head"))
-        .join(F.broadcast(cand_ids), "id", "left_semi")
-    )
+    heads = {}
+    if ids:
+        walked = resolve_supersession(
+            edges, node_state=memories.select("id", state_reason), start=ids
+        )
+        heads = {r["start"]: r["head"] for r in walked.collect()}
 
     # every memory row we will ever need: the candidates themselves plus
-    # their (bounded) replacement heads — semi-join pushes the broadcast
-    # candidate set into the corpus scan, so only bounded rows come back
-    needed_ids = cand_ids.unionByName(
-        heads_cand.select(F.col("head").alias("id"))
-    ).distinct()
-    mem_info = (
-        memories.select(
-            "id",
-            state_reason_expr(
-                F.col("archived"), F.col("t_valid"), F.col("t_invalid"), now_col
-            ).alias("state_reason"),
-            F.col("importance").alias("_imp"),
-            F.col("timestamp").alias("_ts"),
-        )
-        .join(F.broadcast(needed_ids), "id", "left_semi")
+    # their replacement heads, in one id-filtered read
+    needed = list(dict.fromkeys([*ids, *heads.values()]))
+    info_df = memories.filter(in_list_expr("id", needed)).select(
+        "id",
+        state_reason,
+        F.col("importance").alias("_imp"),
+        F.col("timestamp").alias("_ts"),
     )
-    mem_info = maybe_checkpoint(mem_info)
+    info_rows = collect_bounded(info_df) if needed else []
+    info = {}
+    for r in info_rows:
+        info.setdefault(r["id"], r)
 
-    annotated = (
-        results.join(F.broadcast(mem_info.select("id", "state_reason")), "id", "left")
-        .join(F.broadcast(heads_cand), "id", "left")
-        .withColumn(
-            "_reason",
-            F.coalesce(
-                F.col("state_reason"),
-                F.when(F.col("head").isNotNull(), F.lit("superseded")),
-            ),
-        )
-    )
+    # annotate each result row: its own state reason wins, else
+    # 'superseded' when its chain has an active head
+    suppressed, injected = [], {}
+    seen = {r["id"] for r in rows}
+    for r in rows:
+        mem = info.get(r["id"])
+        head = heads.get(r["id"])
+        if not ((mem and mem["state_reason"]) or head is not None):
+            continue
+        suppressed.append(r["id"])
+        if head is None or head in seen:
+            continue
+        # a head may replace several suppressed rows: keep the highest
+        # carried score, then the lowest replaced id (first-wins in the
+        # reference's insertion order = score order)
+        best = injected.get(head)
+        if best is not None:
+            mine = desc_nulls_last_key(r[score_col])
+            theirs = desc_nulls_last_key(best[score_col])
+            if mine < theirs or (
+                mine == theirs and r["id"] > best["state_replaces"]
+            ):
+                continue
+        injected[head] = {
+            "id": head,
+            "match_type": "state_replacement",
+            "state_replaces": r["id"],
+            score_col: r[score_col],
+        }
 
-    kept = annotated.filter(F.col("_reason").isNull()).select(
+    id_type = results.schema["id"].dataType
+    kept = results.filter(
+        F.col("id").isNull() | ~in_list_expr("id", suppressed)
+    ).select(
         "id",
         "match_type",
-        F.lit(None).cast(annotated.schema["id"].dataType).alias("state_replaces"),
-        F.col(score_col),
+        F.lit(None).cast(id_type).alias("state_replaces"),
+        score_col,
     )
-
-    seen = results.select(F.col("id").alias("head"))
-    injected = (
-        annotated.filter(F.col("_reason").isNotNull() & F.col("head").isNotNull())
-        .join(F.broadcast(seen), "head", "left_anti")
-        .select(
-            F.col("head").alias("id"),
-            F.lit("state_replacement").alias("match_type"),
-            F.col("id").alias("state_replaces"),
-            F.col(score_col),
-        )
+    injected_df = local_frame(spark, list(injected.values()), kept.schema)
+    # the ordering columns come from the fetched rows, broadcast back (a
+    # local frame: the corpus is never broadcast)
+    order_cols = local_frame(spark, info_rows, info_df.schema).select(
+        "id", "_imp", "_ts"
     )
-    # a head may replace several suppressed rows: keep the highest carried
-    # score (first-wins in the reference's insertion order = score order)
-    w_head = Window.partitionBy("id").orderBy(F.desc(score_col), F.asc("state_replaces"))
-    injected = (
-        injected.withColumn("_rn", F.row_number().over(w_head))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
+    out = kept.unionByName(injected_df).join(
+        F.broadcast(order_cols), "id", "left"
     )
-
-    out = kept.unionByName(injected)
-    w = Window.partitionBy(F.lit(1)).orderBy(
+    w = Window.orderBy(
         F.desc(score_col), F.desc("_imp"), F.desc("_ts"), F.asc("id")
     )
-    ranked = (
-        out.join(F.broadcast(mem_info.select("id", "_imp", "_ts")), "id", "left")
-        .withColumn("position", F.row_number().over(w))
-    )
+    ranked = out.withColumn("position", F.row_number().over(w))
     if keep_order_cols:
         # callers (recall_full) reuse these for downstream re-ranks instead
         # of re-hydrating from the corpus

@@ -8,13 +8,21 @@ in tests/test_plan_scale.py (a corpus scan hidden behind a checkpoint could
 be broadcast unbounded and the guard would not see it). Setting
 AUTOMEM_SPARK_DISABLE_CHECKPOINT=1 keeps the full lineage visible so the
 guards inspect the real subtree; production runs leave it unset.
+
+Bounded frames that the driver needs as VALUES (candidate ids for a pushed
+`IN` filter, a chain walk's pointers) are collected instead, through
+`collect_bounded`, and re-enter plans as LocalRelations (`local_frame`,
+`maybe_localize`). A LocalRelation costs no job to read: Catalyst folds
+projections and filters over it at optimization time, and its row count
+is exact in the plan statistics.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructField, StructType
 
 DISABLE_ENV = "AUTOMEM_SPARK_DISABLE_CHECKPOINT"
 
@@ -34,6 +42,50 @@ def maybe_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     if not checkpointing_enabled():
         return df
     return df.localCheckpoint(eager=eager)
+
+
+def collect_bounded(df: DataFrame) -> list[dict]:
+    """Collect a frame the caller KNOWS is bounded (a request's candidate
+    set, a walk frontier) to the driver as row dicts. Every driver-side
+    read of a bounded frame goes through here, so a test can inspect the
+    plan of each one.
+
+    Rows come back through Arrow when the frame has a TIMESTAMP column (a
+    Row collect would turn those into naive local-time datetimes; Arrow
+    keeps UTC instants), and as plain Rows otherwise: a Row collect of a
+    LocalRelation runs no job at all, an Arrow collect always runs one."""
+    from pyspark.sql.types import TimestampType
+
+    if any(isinstance(f.dataType, TimestampType) for f in df.schema.fields):
+        return df.toArrow().to_pylist()
+    return [r.asDict() for r in df.collect()]
+
+
+def local_frame(spark: SparkSession, data, schema: StructType) -> DataFrame:
+    """A LocalRelation holding `data` (a `pyarrow.Table`, or a list of
+    row dicts as `collect_bounded` returns them) under `schema`, every
+    field nullable."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = StructType(
+        [StructField(f.name, f.dataType, True) for f in schema.fields]
+    )
+    arrow_schema = to_arrow_schema(schema)
+    if isinstance(data, pa.Table):
+        table = data.cast(arrow_schema)
+    else:
+        table = pa.Table.from_pylist(list(data), schema=arrow_schema)
+    return spark.createDataFrame(table, schema=schema)
+
+
+def maybe_localize(df: DataFrame) -> DataFrame:
+    """Materialize a bounded frame with several consumers as a
+    LocalRelation (one job). Same off-switch as `maybe_checkpoint`: with
+    checkpoints disabled the full lineage stays in the plan."""
+    if not checkpointing_enabled():
+        return df
+    return local_frame(df.sparkSession, df.toArrow(), df.schema)
 
 
 class CheckpointRotation:

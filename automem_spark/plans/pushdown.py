@@ -47,11 +47,16 @@ _GATE = "_barrier_gate_ok"
 
 
 def barrier_filter(df: DataFrame, pred: Column) -> DataFrame:
+    # the helper column takes a name no input column has, so a caller's
+    # own `_barrier_gate_ok` column passes through untouched
+    gate_col = _GATE
+    while gate_col in df.columns:
+        gate_col = "_" + gate_col
     gate = df.sparkSession.createDataFrame(
-        [(True,)], T.StructType([T.StructField(_GATE, T.BooleanType(), False)])
+        [(True,)], T.StructType([T.StructField(gate_col, T.BooleanType(), False)])
     )
     return (
-        df.withColumn(_GATE, F.coalesce(pred, F.lit(False)))
-        .join(F.broadcast(gate), _GATE, "left_semi")
-        .drop(_GATE)
+        df.withColumn(gate_col, F.coalesce(pred, F.lit(False)))
+        .join(F.broadcast(gate), gate_col, "left_semi")
+        .drop(gate_col)
     )

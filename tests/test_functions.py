@@ -230,3 +230,18 @@ def test_ascii_token_spans_rejects_non_string_offsets():
     arr = pa.array(["a b c"], type=pa.large_string())
     with pytest.raises(TypeError, match="pa.string"):
         ascii_token_spans(arr)
+
+
+def test_ascii_token_spans_rejects_chunked_array():
+    """A string ChunkedArray reports the same pa.string() type as an Array
+    but has no single offsets buffer: it must be rejected with the
+    explanatory TypeError, not fail later on a missing attribute."""
+    import pyarrow as pa
+    import pytest
+
+    from automem_spark.functions.asciitok import ascii_token_spans
+
+    arr = pa.chunked_array([["a b"], ["c d"]], type=pa.string())
+    assert arr.type == pa.string()
+    with pytest.raises(TypeError, match="ChunkedArray"):
+        ascii_token_spans(arr)

@@ -238,3 +238,42 @@ def test_shipped_weights_pinned_independently():
     ) == (0.35, 0.35, 0.35, 0.25, 0.2, 0.2)
     # and Weights() remains the reference-default (legacy) blend
     assert (Weights().recency, Weights().importance) == (0.1, 0.1)
+
+
+CONTEXT_ROWS = [
+    # (id, type, tags)
+    (7, " decision ", ["Lang:EN", "x"]),
+    (8, "Insight", ["project/atlas", None]),
+    (13, None, None),
+    (21, "DECISION", []),
+    (22, "note", ["it's/odd\\tag"]),
+]
+
+
+@pytest.mark.parametrize(
+    "ctx",
+    [
+        dict(priority_tags=["lang:en"], priority_types=["decision"], priority_ids=[7, 13]),
+        dict(priority_tags=["Project/Atlas", "it's/odd\\"], priority_ids=["22"]),
+        dict(priority_types=["insight", " note "]),
+        dict(),
+    ],
+)
+def test_context_bonus_sql_matches_tree(spark, ctx):
+    """The X5 context bonus SQL twin (recall_full's one-F.expr seed score)
+    is bit-identical to the Column tree, quoting included."""
+    from automem_spark.functions.scoring import (
+        context_bonus_expr,
+        context_bonus_sql_spark,
+    )
+
+    df = spark.createDataFrame(CONTEXT_ROWS, "id long, type string, tags array<string>")
+    w = Weights(context_tag=0.45, context_type=0.25, context_anchor=0.9)
+    tree = context_bonus_expr(
+        tags=F.col("tags"), mem_type=F.col("type"), mem_id=F.col("id"), w=w, **ctx
+    )
+    fast = F.expr(context_bonus_sql_spark(w=w, **ctx))
+    got = df.select("id", tree.alias("a"), fast.alias("b")).collect()
+    assert [r.a for r in got] == [r.b for r in got]
+    if ctx:
+        assert any(r.a > 0 for r in got)

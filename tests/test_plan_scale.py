@@ -423,3 +423,107 @@ def test_barrier_filter_semantics_and_pushdown_block(spark):
         assert "DataFilters: [isnotnull" in plain or "DataFilters: [(length" in plain
         assert "DataFilters: []" in barr
         assert "LeftSemi" in barr
+
+
+def _shuffle_subtrees(plan: str) -> list[str]:
+    """The subtree under each shuffle Exchange (not BroadcastExchange)."""
+    lines = plan.splitlines()
+
+    def depth(line: str) -> int:
+        m = re.match(r"^[\s:+|-]*", line)
+        return len(m.group(0)) if m else 0
+
+    out = []
+    for i, line in enumerate(lines):
+        if not re.search(r"(?<!Broadcast)Exchange ", line):
+            continue
+        d = depth(line)
+        sub = [line]
+        for nxt in lines[i + 1 :]:
+            if not nxt.strip() or depth(nxt) <= d:
+                break
+            sub.append(nxt)
+        out.append("\n".join(sub))
+    return out
+
+
+# Evidence that a shuffle's input is bounded before the exchange: the
+# optimizer's map-side top-k, a top-k/limit, an inner/semi broadcast join
+# against a bounded build side (the corpus is streamed through it), or a
+# literal id list on the memory key (the priority-id fetch).
+_SHUFFLE_BOUNDS = re.compile(
+    r"WindowGroupLimit|TakeOrderedAndProject|Limit"
+    r"|BroadcastHashJoin .*(Inner|LeftSemi)"
+    r"|Filter \((doc_)?id#\d+L? IN \("
+)
+
+
+def _plans_of_every_read(monkeypatch, build):
+    """Physical plans of the frame `build()` returns AND of every bounded
+    frame it collected to the driver on the way (checkpoints are off, so no
+    lineage hides behind a materialization)."""
+    import automem_spark.plans.checkpoint as ckpt
+
+    plans: list[str] = []
+    orig = ckpt.collect_bounded
+
+    def recording(df):
+        plans.append(_physical_plan(df))
+        return orig(df)
+
+    monkeypatch.setattr(ckpt, "collect_bounded", recording)
+    out = build()
+    plans.append(_physical_plan(out))
+    return plans
+
+
+def assert_no_corpus_shuffle(plans: list[str]) -> None:
+    for plan in plans:
+        assert "SortMergeJoin" not in plan, plan
+        for sub in _shuffle_subtrees(plan):
+            body = "\n".join(sub.splitlines()[1:])
+            scans = [
+                ln for ln in body.splitlines()
+                if "FileScan" in ln and "documents" in ln
+            ]
+            if scans:
+                assert _SHUFFLE_BOUNDS.search(body), (
+                    "shuffle over an unbounded memories scan:\n" + sub
+                )
+
+
+def test_recall_full_no_corpus_shuffle(spark, sf_dir, monkeypatch):
+    """Past the channel scan, recall_full joins, windows and walks only
+    bounded frames: no sort-merge join and no shuffle over the memories
+    scan, in the returned plan or in any plan it collected while building
+    (the parent walk semi-joined every supersession edge with the whole
+    memories state through a sort-merge join)."""
+    import __spark_entry__ as entry
+
+    mem = entry._entity_tagged_memories(spark, sf_dir)
+    edges = edges_view(spark, sf_dir)
+    req = RecallRequest(query="database performance tuning", limit=20)
+    plans = _plans_of_every_read(
+        monkeypatch,
+        lambda: recall_full(
+            mem, edges, req, priority_tags=["lang:en"], priority_ids=[7, 13]
+        ),
+    )
+    assert len(plans) > 3  # the bounded reads were seen
+    assert_no_corpus_shuffle(plans)
+
+
+def test_current_state_filter_no_corpus_shuffle(spark, sf_dir, monkeypatch):
+    mem = memories_view(spark, sf_dir)
+    edges = edges_view(spark, sf_dir)
+    results = mem.limit(40).select(
+        "id",
+        F.lit("keyword").alias("match_type"),
+        F.lit(0.5).alias("final_score"),
+    )
+    plans = _plans_of_every_read(
+        monkeypatch,
+        lambda: current_state_filter(results, mem, edges, now="2026-06-01 00:00:00"),
+    )
+    assert len(plans) > 2
+    assert_no_corpus_shuffle(plans)

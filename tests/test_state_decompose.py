@@ -216,3 +216,17 @@ def test_metadata_terms_walk_rules(spark):
     assert not any("secret" in t for t in out)
     assert "42" not in out and "true" not in out
     assert not any(len(t) > 256 for t in out)
+
+
+def test_state_reason_sql_matches_tree(spark):
+    """current_state_filter's SQL-text state reason equals the Column tree."""
+    from automem_spark.operators.state import state_reason_sql
+
+    mem = _mk_memories(spark)
+    now = F.lit(NOW).cast("timestamp")
+    got = mem.select(
+        state_reason_expr(F.col("archived"), F.col("t_valid"), F.col("t_invalid"), now).alias("a"),
+        F.expr(state_reason_sql(NOW)).alias("b"),
+    ).collect()
+    assert [r.a for r in got] == [r.b for r in got]
+    assert {r.a for r in got} >= {None, "archived", "expired"}
