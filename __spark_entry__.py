@@ -896,7 +896,7 @@ def _semantic_decontaminate_df(
     r9: the row RUNS the broadcast-matmul twin (exact semantics, one Arrow
     scan, zero shuffle), so the driver cross-verifies the shipped default
     against the SQL oracle — the repetition_filter playbook. The race
-    (scripts/race_decontaminate.py, BENCH_SF1.md): matmul 0.58s vs the
+    (BENCH_SF1.md, "Round-9 race"): matmul 0.58s vs the
     expression path's 143.8s at the oracle config; the expression path
     stays the oracle's structural anchor and the property test pins
     twin equality (tests/test_trainprep.py)."""
@@ -1179,7 +1179,7 @@ def q_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Runs the SHIPPED default — the zero-shuffle ``mapInPandas`` twin,
     which won the r8 race (sf1 3.98s vs 5.44s, sf3 10.01s vs 15.42s,
-    noop sink, scripts/race_repetition.py) — so the driver gate
+    noop sink, BENCH_SF1.md "Round-8 race") — so the driver gate
     cross-verifies the default path against the oracle; the expression
     path stays the SQL-expressible anchor and is bit-identical by
     property test (tests/test_corpus_hygiene.py)."""
@@ -1623,26 +1623,25 @@ def _hybrid_metadata_oracle() -> str:
     )
 
 
-# A query where BOTH fused sub-channels produce rows: spark/window/merge hit
-# document content (keyword channel), spark/duckdb/alpha hit the tool/project
-# metadata fields (metadata channel), and 'project' is a requested-field
-# token — so the forced-fuse row below exercises the explode, both per-channel
-# WindowGroupLimit orderings, AND the cross-channel precedence dedup.
+# A query where BOTH the keyword and the metadata channel produce rows:
+# spark/window/merge hit document content (keyword channel), spark/duckdb/
+# alpha hit the tool/project metadata fields (metadata channel), and
+# 'project' is a requested-field token — so the row below exercises both
+# channels' slot caps AND the cross-channel precedence dedup. (The row's
+# name is kept from the retired single-scan fused channel it once forced.)
 RECALL_FUSED_QUERY = "spark window merge from project alpha with duckdb"
 
 
 def q_hybrid_recall_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The single-scan keyword+metadata fused channel FORCED under the
-    driver oracle (r11 verdict ask #1): `recall(..., fuse_channels=True)`
-    executes `_keyword_metadata_fused` (operators/recall.py:170) — the
-    shipped plan above RECALL_FUSE_SCAN_MIN_ROWS (~2M actual rows, the
-    100 TB regime) which default dispatch keeps off at every oracle scale.
-    Reference semantics: R3 keyword search
-    (runtime_recall_helpers.py:595-724) ∪ R5 metadata sidecar
-    (recall.py:2015-2040) in ONE corpus pass, then the X1 hybrid blend."""
+    """Vector-less `recall()` on a metadata-plus-phrase query: the composed
+    R3 keyword search (runtime_recall_helpers.py:595-724) ∪ R5 metadata
+    sidecar (recall.py:2015-2040), channel precedence keyword > metadata,
+    then the X1 hybrid blend. Until the fused single-scan channel was
+    retired this row forced it; it now checks the composed path — the one
+    production path — on a query where both channels fill slots."""
     mem = memories_view(spark, sf_dir)
     req = RecallRequest(query=RECALL_FUSED_QUERY, limit=10)
-    out = recall(mem, req, now=NOW, fuse_channels=True)
+    out = recall(mem, req, now=NOW)
     return out.select(
         "id", "match_type",
         F.round("match_score", 6).alias("match_score"),
@@ -1651,11 +1650,11 @@ def q_hybrid_recall_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _hybrid_fused_oracle() -> str:
-    """Composed-channel-union oracle for the fused row: keyword top-10 ∪
-    (metadata top-10 minus keyword ids — channel precedence keyword >
-    metadata), X1 blend per channel, final W1 sort. Entirely channel-by-
-    channel SQL, so a fused-plan bug (wrong slot cap, missing precedence,
-    clobbered score) hash-mismatches."""
+    """Composed-channel-union oracle for `hybrid_recall_fused`: keyword
+    top-10 ∪ (metadata top-10 minus keyword ids — channel precedence
+    keyword > metadata), X1 blend per channel, final W1 sort. Entirely
+    channel-by-channel SQL, so a wrong slot cap, missing precedence or
+    clobbered score in the composed recall plan hash-mismatches."""
     kws = extract_keywords(RECALL_FUSED_QUERY.strip().lower())
     phrase = RECALL_FUSED_QUERY.strip().lower()
     max_raw = float(3 * len(kws) + 3)

@@ -138,20 +138,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def minhash_signature_expr(shingles: Column, num_hashes: int = 64) -> Column:
-    """MinHash signature: per seed i, min(xxhash64(shingle, seed=i)).
-    All JVM expressions — no UDF, no shuffle."""
-    def hash_with_seed(i: int):
-        return lambda s: F.xxhash64(s, F.lit(i))
-
-    return F.array(
-        *[
-            F.array_min(F.transform(shingles, hash_with_seed(i)))
-            for i in range(num_hashes)
-        ]
-    )
-
-
 def minhash_banded_sql(num_hashes: int, bands: int) -> str:
     """SQL text producing (id, band, bucket) from an exploded (id, shingle)
     frame bound as ``{exploded}`` — the signature-min and band-bucket
@@ -262,6 +248,21 @@ def minhash_banded_map(
     (10k docs/batch) with vectorized numpy inside — the same scan-speed
     shape as the multimodal and repetition kernels.
     """
+    id_type = df.schema[id_col].dataType.simpleString()
+    out_schema = f"id {id_type}, band int, bucket bigint"
+    kernel = _minhash_band_kernel(
+        text_col=text_col, id_col=id_col, n=n, num_hashes=num_hashes, bands=bands
+    )
+    return df.select(id_col, text_col).mapInPandas(kernel, schema=out_schema)
+
+
+def _minhash_band_kernel(
+    *, text_col: str, id_col: str, n: int, num_hashes: int, bands: int
+):
+    """The ``mapInPandas`` function of :func:`minhash_banded_map`: an
+    iterator of pandas batches (``id_col``, ``text_col``) -> an iterator of
+    (id, band, bucket) frames. Built here so it can also be driven on an
+    in-memory batch, without a Spark worker."""
     import re as _re
     from typing import Iterator
 
@@ -276,8 +277,6 @@ def minhash_banded_map(
     )
 
     rows_per_band = num_hashes // bands
-    id_type = df.schema[id_col].dataType.simpleString()
-    out_schema = f"id {id_type}, band int, bucket bigint"
     punct = _re.compile(r"[^\w\s]", _re.ASCII)
     ws = _re.compile(r"\s+", _re.ASCII)
 
@@ -396,12 +395,17 @@ def minhash_banded_map(
             try:
                 arr = pa.array(pdf[text_col], type=pa.string(), from_pandas=True)
             except pa.lib.ArrowCapacityError:
-                # a single batch whose text exceeds the 2 GiB pa.string()
-                # payload cap (possible at maxRecordsPerBatch docs of huge
-                # text): fall back to the per-row Python path for the whole
-                # batch instead of failing the task (r15, ADVICE r14)
+                arr = None
+            if not isinstance(arr, pa.Array):
+                # a batch whose text exceeds the 2 GiB pa.string() payload
+                # cap (possible at maxRecordsPerBatch docs of huge text):
+                # pyarrow either raises or returns a multi-chunk
+                # ChunkedArray, whose take() overflows the offsets and which
+                # ascii_token_spans rejects. Either way the whole batch goes
+                # through the per-row Python path instead of failing the task
+                texts = pdf[text_col].to_numpy(dtype=object, na_value=None)
                 ids_r, band_r, bucket_r = _sig_rows(
-                    ids_np, *_py_shingle_matrix(list(pdf[text_col]))
+                    ids_np, *_py_shingle_matrix(list(texts))
                 )
                 yield pd.DataFrame(
                     {"id": ids_r, "band": band_r, "bucket": bucket_r}
@@ -438,7 +442,7 @@ def minhash_banded_map(
                     {"id": ids_r, "band": band_r, "bucket": bucket_r}
                 )
 
-    return df.select(id_col, text_col).mapInPandas(kernel, schema=out_schema)
+    return kernel
 
 
 def bucketed_candidate_pairs(

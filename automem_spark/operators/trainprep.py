@@ -653,7 +653,7 @@ def semantic_decontaminate_matmul(
     return src.mapInPandas(compute, schema=out_schema)
 
 
-# Measured crossover (scripts/race_decontaminate.py, r9, min-of-2 noop):
+# Measured crossover (BENCH_SF1.md "Round-9 race", min-of-2 noop):
 # matmul wins 0.58s vs 3.3s at 20k x 207 pairs, 1.7s vs 10.1s at 18k x 2k,
 # 6.4s vs 8.0s at 58k x 2k; ivf first wins at 198k x 2062 ~= 4.1e8 pairs
 # (10.2s vs 12.5s) where its pruning amortizes the fixed quantizer fit.
@@ -878,7 +878,7 @@ def semantic_decontaminate_ivf(
     at the default probe width on the fixture; the exact path remains the
     oracle row.
 
-    Physical shape (r9 rewrite, raced in scripts/race_decontaminate.py):
+    Physical shape (r9 rewrite, raced in BENCH_SF1.md "Round-9 race"):
     the original join + per-pair higher-order-function cosine + groupBy
     was allocation-bound (~30us/pair) and shuffled a row per item; the
     candidate relation is instead broadcast as {cell -> normalized eval

@@ -98,20 +98,6 @@ def main() -> None:
         "(7-30x documents re-scans of pure fixture noise) is gone from every",
         "graph plan, matching how a production edges table would scan.",
         "",
-        "Cluster-sizing knobs (r14, plans/tuning.py): the three physical-",
-        "strategy dispatch bounds are runtime-configurable without a code",
-        "edit, resolution order session conf > env > default —",
-        "`spark.automem.cc_local_max_edges` / `AUTOMEM_CC_LOCAL_MAX_EDGES`",
-        "(default 1,000,000 directed edge rows; single-task union-find below,",
-        "distributed pointer-jumping above — size to ONE executor's heap at",
-        "~2 dict entries/row), `spark.automem.supersession_local_max_walks` /",
-        "`AUTOMEM_SUPERSESSION_LOCAL_MAX_WALKS` (default 1,000,000; same",
-        "shape for the chain walk), and `spark.automem.recall_fuse_scan_min_",
-        "rows` / `AUTOMEM_RECALL_FUSE_SCAN_MIN_ROWS` (default 1,500,000 pool",
-        "rows; composed two-scan recall below, one-scan fused above — the",
-        "cold-cache crossover, re-measure on your storage tier). Override",
-        "paths are dispatch-tested in tests/test_tuning_knobs.py.",
-        "",
         "| query | shuffles | broadcasts | codegen spans | scans (cols read, pushdown) |",
         "|---|---|---|---|---|",
     ]

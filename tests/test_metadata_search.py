@@ -125,6 +125,30 @@ def test_channel_uses_fast_path_and_matches_tree(spark, sf_dir):
     assert len(got) > 0
 
 
+def test_metadata_channel_respects_slot_cap(spark, sf_dir):
+    """Metadata slots = min(limit, 10) (recall.py:2015-2040): with limit 25
+    the sidecar contributes at most 10 rows, the keyword channel up to 25."""
+    from automem_spark.operators.recall import keyword_channel
+
+    pool = base_filter(memories_view(spark, sf_dir), RecallRequest())
+    fields = {f: F.col(f) for f in FIELDS}
+    assert 0 < metadata_channel(pool, "spark", 25, fields).count() <= 10
+    assert keyword_channel(pool, "spark", 25).count() <= 25
+
+
+def test_hybrid_recall_fused_row_fills_both_channels(spark, sf_dir):
+    """The `hybrid_recall_fused` registry row's query is chosen so that both
+    the keyword and the metadata channel reach the top 10. The oracle only
+    checks equality, so pin that the row still exercises both channels, on
+    the composed two-scan plan."""
+    import __spark_entry__ as E
+
+    df = E.q_hybrid_recall_fused(spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Scan parquet") == 2
+    assert {r["match_type"] for r in df.collect()} == {"keyword", "metadata"}
+
+
 def test_spec_generator_emits_pinned_texts():
     """The r11 unification (one spec + one generator -> both SQL dialects)
     is pinned against the pre-unification texts, captured verbatim into

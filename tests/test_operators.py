@@ -344,6 +344,48 @@ def test_minhash_banded_map_matches_sql(spark, sf_dir):
     assert len(a) == d.count() * 16
 
 
+def test_minhash_band_kernel_chunked_batch_falls_back():
+    """A text batch over the 2 GiB pa.string() cap converts to a multi-chunk
+    ChunkedArray instead of raising (pyarrow 16). The kernel must send such
+    a batch through the per-row Python path and emit the same
+    (id, band, bucket) rows as the vectorized path; built here from an
+    in-memory two-chunk array, no 2 GiB allocation."""
+    import pandas as pd
+    import pyarrow as pa
+
+    from automem_spark.operators.dedup import _minhash_band_kernel
+
+    texts = [
+        "the quick brown fox jumps over the lazy dog",
+        None,
+        "",
+        "two words",
+        "éü中文 mixed ASCII tokens here",
+        "dup dup dup dup dup dup",
+    ]
+    ids = list(range(1, len(texts) + 1))
+    chunked = pa.chunked_array([texts[:3], texts[3:]], type=pa.string())
+    plain = pd.DataFrame({"doc_id": ids, "text": texts})
+    as_chunks = pd.DataFrame(
+        {"doc_id": ids, "text": pd.arrays.ArrowExtensionArray(chunked)}
+    )
+    assert isinstance(
+        pa.array(as_chunks["text"], type=pa.string(), from_pandas=True),
+        pa.ChunkedArray,
+    )
+    kernel = _minhash_band_kernel(
+        text_col="text", id_col="doc_id", n=3, num_hashes=16, bands=4
+    )
+
+    def rows(pdf):
+        out = pd.concat(list(kernel(iter([pdf]))))
+        return sorted(map(tuple, out.itertuples(index=False)))
+
+    fast = rows(plain)
+    assert len(fast) == len(texts) * 4
+    assert rows(as_chunks) == fast
+
+
 def test_minhash_pairs_identical_across_impls(spark, sf_dir):
     """End-to-end pin: the default kernel path and the SQL oracle path of
     minhash_lsh_pairs produce the same verified (src, dst, jaccard) set —
@@ -446,26 +488,17 @@ def test_text_stats_map_bit_identical_to_frame(spark, sf_dir):
     assert kernel.exceptAll(frame).count() == 0
 
 
-def test_text_stats_auto_dispatches_on_bound(spark, sf_dir):
-    """The size dispatch must pick the kernel above the knob and the
-    expression frame below it, and the knob must be runtime-tunable
-    (spark.automem.text_stats_kernel_min_rows) like the other dispatch
-    bounds."""
+def test_text_stats_auto_dispatches_on_bound(spark, sf_dir, monkeypatch):
+    """The size dispatch must pick the kernel at or above
+    TEXT_STATS_KERNEL_MIN_ROWS and the expression frame below it."""
+    from automem_spark.operators import textquality
     from automem_spark.operators.textquality import text_stats_auto
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    key = "spark.automem.text_stats_kernel_min_rows"
-    try:
-        spark.conf.set(key, "1")
-        plan_kernel = (
-            text_stats_auto(d)._jdf.queryExecution().executedPlan().toString()
-        )
-        spark.conf.set(key, str(10**12))
-        plan_frame = (
-            text_stats_auto(d)._jdf.queryExecution().executedPlan().toString()
-        )
-    finally:
-        spark.conf.unset(key)
+    monkeypatch.setattr(textquality, "TEXT_STATS_KERNEL_MIN_ROWS", 1)
+    plan_kernel = text_stats_auto(d)._jdf.queryExecution().executedPlan().toString()
+    monkeypatch.setattr(textquality, "TEXT_STATS_KERNEL_MIN_ROWS", 10**12)
+    plan_frame = text_stats_auto(d)._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan_kernel
     assert "MapInPandas" not in plan_frame
 
